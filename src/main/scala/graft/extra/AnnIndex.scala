@@ -57,11 +57,7 @@ object AnnIndex {
     val prev = IndexManifests.latest(spark, dir)
     val v = prev.map(_._1).getOrElse(0L) + 1
     val seg = f"codes/seg-$v%09d"
-    idx.coded
-      .repartition(col("list_id"))
-      .sortWithinPartitions(col("list_id"), col("id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("list_id")
-      .parquet(s"$dir/$seg")
+    writeCodes(idx.coded, s"$dir/$seg")
     // `pos` persists the SEQUENCE ORDER, which is load-bearing: PQ
     // codes index centroids by position (codes/dtable entry j = j-th
     // element), and the sample codebook's order is hash-order, not cid
@@ -84,11 +80,23 @@ object AnnIndex {
     // crash-replayed streaming micro-batch, landing right after a
     // corpus rebuild, find no token and re-apply its rows (ADVICE r14)
     val entries = Map("codes" -> Seq(seg)) ++
-      prev.flatMap(_._2.get(IndexManifests.TxnFrame))
-        .map(IndexManifests.TxnFrame -> _).toMap
+      IndexManifests.ledgerOf(prev.map(_._2).getOrElse(Map.empty))
     IndexManifests.commit(spark, dir, v, entries)
-    IndexManifests.vacuum(spark, dir, Seq("codes", "tombstones"))
+    IndexManifests.vacuum(spark, dir, Frames)
   }
+
+  private val Frames = Seq("codes", "tombstones")
+
+  /** The codes layout: one shuffle (hash on `list_id`, or one task when
+    * `single`) so each posting list lands in one file per task,
+    * directory-partitioned by `list_id` and `id`-sorted within files.
+    */
+  private def writeCodes(coded: org.apache.spark.sql.DataFrame,
+      path: String, single: Boolean = false): Unit =
+    (if (single) coded.repartition(1) else coded.repartition(col("list_id")))
+      .sortWithinPartitions(col("list_id"), col("id"))
+      .write.mode(SaveMode.Overwrite).partitionBy("list_id")
+      .parquet(path)
 
   /** The driver-held half of a persisted index — both codebooks and
     * the PQ geometry, FROZEN by the build contract (appends never
@@ -214,14 +222,17 @@ object AnnIndex {
     Similarity.searchIvfPqVectors(readIvfPq(spark, dir), queries, k,
       nprobe, candFactor)
 
-  def readIvfPq(spark: SparkSession, dir: String): Similarity.IvfPqIndex = {
+  def readIvfPq(spark: SparkSession, dir: String): Similarity.IvfPqIndex =
+    indexOf(spark, dir, entriesOf(spark, dir)._2)
+
+  private def indexOf(spark: SparkSession, dir: String,
+      entries: Map[String, Seq[String]]): Similarity.IvfPqIndex = {
     val cb = readCodebooks(spark, dir)
-    val (_, entries) = entriesOf(spark, dir)
     val coded0 = readCodes(spark, dir, entries)
     // tombstoned ids (see delete()) drop out of every scan; the static
     // list_id IN (probed) filter searchIvfPq adds still pushes through
     // the left-anti join to the partitioned read (left-side predicate)
-    val coded = readTombstones(spark, dir, entries)
+    val coded = IndexManifests.readFrame(spark, dir, entries, "tombstones")
       .fold(coded0)(t => coded0.join(t, Seq("id"), "left_anti"))
     Similarity.IvfPqIndex(cb.coarse, cb.pq, cb.m, cb.sub, coded,
       cb.residual)
@@ -296,13 +307,6 @@ object AnnIndex {
     // ~26µs on the hash path, so streams that can see backlog batches
     // should keep the default. [[compact]] folds accumulated per-batch
     // files back into one file per list on the maintenance cadence.
-    val arranged =
-      if (singleFileBatch)
-        encoded.repartition(1)
-          .sortWithinPartitions(col("list_id"), col("id"))
-      else
-        encoded.repartition(col("list_id"))
-          .sortWithinPartitions(col("list_id"), col("id"))
     // new SEGMENT + manifest commit: the batch's files are invisible
     // to searches until the commit lands (a crashed append leaves an
     // orphan segment compact sweeps, never a torn read). writerEntries
@@ -313,109 +317,32 @@ object AnnIndex {
     // the manifest's applied-batch ledger and no-ops BEFORE writing
     // anything — the ledger commits atomically with the segment it
     // covers, so the index is bit-identical under replay.
-    if (txn.exists { case (sid, b) =>
-        IndexManifests.txnApplied(entries, sid, b) }) return
+    if (IndexManifests.txnApplied(entries, txn)) return
     val seg = f"codes/seg-${v0 + 1}%09d"
-    arranged.write.mode(SaveMode.Overwrite).partitionBy("list_id")
-      .parquet(s"$dir/$seg")
-    val newSegs = entries.getOrElse("codes", Nil) :+ seg
-    val withSeg = entries + ("codes" -> newSegs)
-    IndexManifests.commit(spark, dir, v0 + 1,
-      txn.fold(withSeg) { case (sid, b) =>
-        IndexManifests.withTxn(withSeg, sid, b) })
+    writeCodes(encoded, s"$dir/$seg", single = singleFileBatch)
+    IndexManifests.commit(spark, dir, v0 + 1, IndexManifests.withTxn(
+      entries + ("codes" -> (entries.getOrElse("codes", Nil) :+ seg)), txn))
     if (autoCompactFanout > 0)
       compactTier(spark, dir, autoCompactFanout): Unit
   }
 
-  /** SIZE-TIERED minor compaction (r15 verdict #1 — the auto policy
-    * behind `autoCompactFanout`, the [[SubstrIndex.compactTier]]
-    * discipline on the dense layout): merge ONLY the first full size
-    * tier of `codes/` segments ([[IndexManifests.pickTier]]) into one
-    * tier-up `list_id`-partitioned segment — per-trigger work bounded
-    * by the tier's bytes, never the index, live segment count
-    * O(fanout · log N). Tombstones are NOT applied here (the read
-    * path's anti-join stays; only the major [[compact]] makes deletes
-    * physical) and codebooks/meta are untouched, so searches are
-    * bit-identical before and after — the merged rows land id-sorted
-    * within each list partition exactly as the inputs were. The txn
-    * ledger and tombstone frame carry through; a now-full higher tier
-    * waits for the next append's trigger. Returns true when a tier
-    * merged.
+  /** SIZE-TIERED minor compaction (the auto policy behind
+    * `autoCompactFanout`, [[IndexManifests.TierFold]]): merge ONLY the
+    * first full size tier of `codes/` segments into one tier-up
+    * segment — per-trigger work bounded by the tier's bytes, never the
+    * index, live segment count O(fanout · log N). Codebooks/meta are
+    * untouched and the merged rows land id-sorted within each list
+    * partition exactly as the inputs were, so searches are
+    * bit-identical before and after. A legacy flat layout (no
+    * manifest) never folds: it must go through [[compact]]'s migration
+    * first. Returns true when a tier merged.
     */
   def compactTier(spark: SparkSession, dir: String, fanout: Int = 8,
       retainVersions: Int = 1): Boolean =
-    prepareCompactTier(spark, dir, fanout) match {
-      case None => false
-      case Some(p) => commitPreparedTier(spark, dir, p, retainVersions)
-    }
+    Tier.run(spark, dir, fanout, retainVersions)
 
-  /** Phase 1 of the two-phase [[compactTier]] (r17 — the
-    * [[SubstrIndex.prepareAppend]] split applied to compaction): pick
-    * the first full size tier and WRITE the merged tier-up segment's
-    * files without committing them — invisible until
-    * [[commitPreparedTier]] lands the manifest, so a streaming ingest
-    * can run the (heavy) merge OFF the micro-batch path, concurrent
-    * with later batches, and fold it in with one cheap manifest write
-    * on the batch thread. The merged segment lives under a `tier-`
-    * name so a concurrent append's `seg-` write can never collide. A
-    * crash (or dropped prepare) leaves orphan files for
-    * [[compact]]/vacuum to sweep — the same crash shape as a failure
-    * inside the old single-phase fold.
-    */
-  private[graft] final case class PreparedTier(picked: Seq[String],
-      seg: String)
-
-  private[graft] def prepareCompactTier(spark: SparkSession, dir: String,
-      fanout: Int = 8): Option[PreparedTier] = {
-    // manifest-committed layouts only: a legacy flat layout must go
-    // through [[compact]]'s migration first (writerEntries' contract —
-    // a nested tier-up segment inside the live flat dir would corrupt
-    // partition discovery), and the auto path only ever runs after an
-    // append, which guarantees the manifest exists
-    val (v0, entries) = IndexManifests.latest(spark, dir)
-      .getOrElse(return None)
-    val segs = entries.getOrElse("codes", Nil)
-    val sizes = IndexManifests.segmentBytes(spark, dir, segs)
-    val picked = IndexManifests.pickTier(sizes, fanout)
-    if (picked.isEmpty) return None
-    val seg = f"codes/tier-$v0%09d"
-    picked.map(rel => spark.read.parquet(s"$dir/$rel"))
-      .reduce(_.unionByName(_))
-      .repartition(col("list_id"))
-      .sortWithinPartitions(col("list_id"), col("id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("list_id")
-      .parquet(s"$dir/$seg")
-    Some(PreparedTier(picked, seg))
-  }
-
-  /** Phase 2: swap the prepared tier into the CURRENT manifest (which
-    * may have gained append segments since phase 1 — appends only add,
-    * so the picked segments are still live; bail out without
-    * committing if any vanished, e.g. a concurrent major [[compact]]).
-    * Must run on the single writer thread (the manifest commit is
-    * put-if-absent); searches are bit-identical before and after — the
-    * merged rows land id-sorted within each list partition exactly as
-    * the inputs were, and the ledger/tombstones ride the entries map.
-    */
-  private[graft] def commitPreparedTier(spark: SparkSession, dir: String,
-      p: PreparedTier, retainVersions: Int = 1): Boolean = {
-    val (v1, entries) = IndexManifests.latest(spark, dir)
-      .getOrElse(return false)
-    val segs = entries.getOrElse("codes", Nil)
-    if (!p.picked.forall(segs.contains)) return false
-    IndexManifests.commit(spark, dir, v1 + 1,
-      entries + ("codes" -> (segs.filterNot(p.picked.toSet) :+ p.seg)))
-    IndexManifests.vacuum(spark, dir, Seq("codes", "tombstones"),
-      keepVersions = retainVersions)
-    true
-  }
-
-  private def readTombstones(spark: SparkSession, dir: String,
-      entries: Map[String, Seq[String]])
-      : Option[org.apache.spark.sql.DataFrame] = {
-    val paths = entries.getOrElse("tombstones", Nil).map(r => s"$dir/$r")
-    if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
-  }
+  private[graft] val Tier = new IndexManifests.TierFold(Seq("codes"),
+      Frames)({ in => writeCodes(in.read, s"${in.dir}/${in.out}"); Map.empty })
 
   /** Delete vectors from the index — the dense mirror of
     * [[Bm25Index.delete]], LSM-style: ids are appended to a
@@ -442,7 +369,7 @@ object AnnIndex {
     // grow the frame linearly with RUNS, and every search's anti-join
     // pays for the duplicates until a compact (Bm25Index.delete
     // already dedups; this is its dense mirror)
-    val newIds = readTombstones(spark, dir, entries)
+    val newIds = IndexManifests.readFrame(spark, dir, entries, "tombstones")
       .fold(incoming)(t =>
         incoming.join(t.select("id"), Seq("id"), "left_anti"))
     val seg = f"tombstones/seg-${v0 + 1}%09d"
@@ -487,26 +414,20 @@ object AnnIndex {
   def compact(spark: SparkSession, dir: String,
       retainVersions: Int = 1): Unit = {
     val (v0, entries) = entriesOf(spark, dir)
-    val tomb = readTombstones(spark, dir, entries)
+    val tomb = IndexManifests.readFrame(spark, dir, entries, "tombstones")
     val live0 = readCodes(spark, dir, entries)
     val seg = f"codes/seg-${v0 + 1}%09d"
-    tomb.fold(live0)(t => live0.join(t, Seq("id"), "left_anti"))
-      .repartition(col("list_id"))
-      .sortWithinPartitions(col("list_id"), col("id"))
-      .write.mode(SaveMode.Overwrite).partitionBy("list_id")
-      .parquet(s"$dir/$seg")
+    writeCodes(tomb.fold(live0)(t => live0.join(t, Seq("id"), "left_anti")),
+      s"$dir/$seg")
     // the commit is the swap: one fresh segment, no tombstones;
     // superseded segments outside the retention window (and any
     // crashed writer's orphans) are then dropped physically
     // the applied-batch ledger survives maintenance: dropping it here
     // would let a crash-replayed micro-batch right after a compact
     // re-apply its rows
-    val fresh = Map("codes" -> Seq(seg)) ++
-      entries.get(IndexManifests.TxnFrame)
-        .map(IndexManifests.TxnFrame -> _).toMap
-    IndexManifests.commit(spark, dir, v0 + 1, fresh)
-    IndexManifests.vacuum(spark, dir, Seq("codes", "tombstones"),
-      keepVersions = retainVersions)
+    IndexManifests.commit(spark, dir, v0 + 1,
+      Map("codes" -> Seq(seg)) ++ IndexManifests.ledgerOf(entries))
+    IndexManifests.vacuum(spark, dir, Frames, keepVersions = retainVersions)
   }
 
   /** Index ROLLBACK after a bad ingest or takedown —
@@ -528,15 +449,8 @@ object AnnIndex {
     * only the segment set is versioned).
     */
   def readIvfPqAt(spark: SparkSession, dir: String,
-      version: Long): Similarity.IvfPqIndex = {
-    val cb = readCodebooks(spark, dir)
-    val entries = IndexManifests.at(spark, dir, version)
-    val coded0 = readCodes(spark, dir, entries)
-    val coded = readTombstones(spark, dir, entries)
-      .fold(coded0)(t => coded0.join(t, Seq("id"), "left_anti"))
-    Similarity.IvfPqIndex(cb.coarse, cb.pq, cb.m, cb.sub, coded,
-      cb.residual)
-  }
+      version: Long): Similarity.IvfPqIndex =
+    indexOf(spark, dir, IndexManifests.at(spark, dir, version))
 
   /** Build-and-persist in one call; returns the read-back index. */
   def buildAndWriteIvfPq(emb: org.apache.spark.sql.DataFrame,

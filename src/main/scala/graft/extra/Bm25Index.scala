@@ -1,6 +1,6 @@
 package graft.extra
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -75,38 +75,9 @@ import org.apache.spark.sql.types.DecimalType
   */
 object Bm25Index {
 
+  import IndexManifests.readFrame
+
   private val Frames = Seq("tf", "dl", "df", "meta", "tombstones")
-
-  private def latest(spark: SparkSession, dir: String)
-      : Option[(Long, Map[String, Seq[String]])] =
-    IndexManifests.latest(spark, dir)
-
-  private def latestFull(spark: SparkSession, dir: String) =
-    IndexManifests.latestFull(spark, dir)
-
-  private def requireLatest(spark: SparkSession, dir: String)
-      : (Long, Map[String, Seq[String]]) =
-    IndexManifests.requireLatest(spark, dir, "BM25")
-
-  private def requireLatestFull(spark: SparkSession, dir: String)
-      : (Long, Map[String, Seq[String]], Map[String, (String, String)]) =
-    latestFull(spark, dir).getOrElse(throw new IllegalStateException(
-      s"no committed BM25 index at $dir (missing _manifests)"))
-
-  private def commit(spark: SparkSession, dir: String, version: Long,
-      entries: Map[String, Seq[String]],
-      ranges: Map[String, (String, String)] = Map.empty): Unit =
-    IndexManifests.commit(spark, dir, version, entries, ranges)
-
-  /** Read one frame as the union of its committed segments; None when
-    * the manifest lists no segment for it (e.g. no tombstones yet).
-    */
-  private def readFrame(spark: SparkSession, dir: String,
-      entries: Map[String, Seq[String]], frame: String)
-      : Option[DataFrame] = {
-    val paths = entries.getOrElse(frame, Nil).map(rel => s"$dir/$rel")
-    if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
-  }
 
   /** [[readFrame]] with MANIFEST-RANGE file pruning (the r15
     * [[SubstrIndex]] discipline applied to the term frames): when the
@@ -163,9 +134,33 @@ object Bm25Index {
     }
   }
 
-  private def dropOrphanSegments(spark: SparkSession, dir: String,
-      live: Map[String, Seq[String]]): Unit =
-    IndexManifests.dropOrphanSegments(spark, dir, Frames, live)
+  /** Write one frame's rows as the segment `seg` in that frame's
+    * layout and return the new files' `#range=` term stats (tf and df
+    * only — the serving path prunes those from the manifest alone).
+    * tf is range-clustered on (term, id) over `numFiles` files, df on
+    * term and dl on id over a quarter of that: a build/compact dl frame
+    * is CORPUS-wide (one row per doc), and the old repartition(1)
+    * pushed 100 TB's worth of doc lengths through one writer (r16;
+    * readers join dl keyed on the scored rows, so its file count is
+    * invisible to them). meta is one row per segment.
+    */
+  private def writeFrame(dir: String, frame: String, rows: DataFrame,
+      seg: String, numFiles: Int): Map[String, (String, String)] = {
+    val path = s"$dir/$seg"
+    val quarter = math.max(1, numFiles / 4)
+    frame match {
+      case "tf" =>
+        Layout.writeClustered(rows, path, Seq(col("term"), col("id")),
+          numFiles)
+      case "dl" => Layout.writeClustered(rows, path, Seq(col("id")), quarter)
+      case "df" =>
+        Layout.writeClustered(rows, path, Seq(col("term")), quarter)
+      case _ => rows.coalesce(1).write.mode(SaveMode.Overwrite).parquet(path)
+    }
+    if (frame == "tf" || frame == "df")
+      IndexManifests.fileRangeStats(rows.sparkSession, dir, seg, "term")
+    else Map.empty
+  }
 
   /** Tokenize the corpus once and persist tf/dl/df/meta as one new
     * SEGMENT per frame, then commit the manifest (the crash-atomic
@@ -185,16 +180,13 @@ object Bm25Index {
       s"build supports Overwrite|Append, got $mode")
     val spark = docs.sparkSession
     import spark.implicits._
-    val prevFull = latestFull(spark, dir)
-    val prev = prevFull.map { case (v, e, _) => (v, e) }
-    val prevRanges = prevFull.map(_._3)
-      .getOrElse(Map.empty[String, (String, String)])
+    val prev = IndexManifests.latestFull(spark, dir)
     // EXACTLY-ONCE for streaming ingest (r13 verdict #2): a replayed
     // micro-batch whose batchId is already in the manifest's applied-
     // batch ledger no-ops before any tokenization or write — see
     // [[IndexManifests.txnApplied]]
-    if (txn.exists { case (sid, b) => IndexManifests.txnApplied(
-        prev.map(_._2).getOrElse(Map.empty), sid, b) }) return
+    if (IndexManifests.txnApplied(prev.map(_._2).getOrElse(Map.empty), txn))
+      return
     // Append EXTENDS the committed index: on a dir that HOLDS SEGMENT
     // DATA but no manifest (a pre-manifest legacy layout), prev=None
     // would yield base=empty and commit a manifest naming ONLY the new
@@ -207,16 +199,18 @@ object Bm25Index {
     if (mode == SaveMode.Append && prev.isEmpty) {
       val (fs, _) = IndexManifests.fsOf(spark, dir)
       val legacyData = Frames.exists { f =>
-        val p = new org.apache.hadoop.fs.Path(s"$dir/$f")
+        val p = new Path(s"$dir/$f")
         fs.exists(p) && fs.listStatus(p).nonEmpty
       }
-      if (legacyData) requireLatest(spark, dir): Unit
+      if (legacyData) IndexManifests.requireLatest(spark, dir, "BM25"): Unit
     }
-    val prevV = prev.map(_._1).getOrElse(0L)
-    val base: Map[String, Seq[String]] =
-      if (mode == SaveMode.Append) prev.map(_._2).getOrElse(Map.empty)
-      else Map.empty
-    val v = prevV + 1
+    // an append extends the head's segments, range stats, tombstones
+    // and ledger; an overwrite starts clean
+    val (base, baseRanges) = prev.filter(_ => mode == SaveMode.Append)
+      .map { case (_, e, r) => (e, r) }
+      .getOrElse((Map.empty[String, Seq[String]],
+        Map.empty[String, (String, String)]))
+    val v = prev.map(_._1).getOrElse(0L) + 1
     val seg = f"seg-$v%09d"
     val tf = docs.select(col(idCol).as("id"),
         explode(Text.tokens(col(textCol))).as("term"))
@@ -224,53 +218,34 @@ object Bm25Index {
       .agg(count(lit(1)).as("tf"))
       .persist()
     // house cache rule: tf feeds four consumers (tf/, dl/, df/, meta);
-    // materialize once, release before returning
-    try {
-      Layout.writeClustered(tf, s"$dir/tf/$seg",
-        Seq(col("term"), col("id")), numFiles)
-      // dl is id-CLUSTERED over numFiles/4 files, not a single-task
-      // funnel: a build/compact dl frame is CORPUS-wide (one row per
-      // doc), and repartition(1) pushed 100 TB's worth of doc
-      // lengths through one writer (r16; readers join dl keyed on
-      // the scored rows, so the file count is invisible to them)
-      Layout.writeClustered(
-        tf.groupBy(col("id")).agg(sum(col("tf")).as("dl")),
-        s"$dir/dl/$seg", Seq(col("id")), math.max(1, numFiles / 4))
-      Layout.writeClustered(
-        tf.groupBy(col("term")).agg(count(lit(1)).as("df")),
-        s"$dir/df/$seg", Seq(col("term")), math.max(1, numFiles / 4))
-      // n_docs is the CORPUS row count (docs with zero tokens included
-      // — bm25Search counts them too); sum_dl re-aggregates tf
-      val nDocs = docs.count()
-      val sumDl = tf.agg(coalesce(sum(col("tf")), lit(0L))).head().getLong(0)
-      Seq((nDocs, sumDl)).toDF("n_docs", "sum_dl")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$dir/meta/$seg")
+    // materialize once, release before returning. The per-file term
+    // ranges of the new tf/df segments ride the commit (the r15
+    // SubstrIndex discipline): searches prune file lists from the
+    // manifest alone, zero footer opens on the serving path.
+    val segRanges = try {
+      writeFrame(dir, "tf", tf, s"tf/$seg", numFiles) ++
+        writeFrame(dir, "dl", tf.groupBy(col("id")).agg(sum(col("tf"))
+          .as("dl")), s"dl/$seg", numFiles) ++
+        writeFrame(dir, "df", tf.groupBy(col("term")).agg(count(lit(1))
+          .as("df")), s"df/$seg", numFiles) ++ {
+          // n_docs is the CORPUS row count (docs with zero tokens
+          // included — bm25Search counts them too); sum_dl
+          // re-aggregates tf
+          val nDocs = docs.count()
+          val sumDl = tf.agg(coalesce(sum(col("tf")), lit(0L))).head()
+            .getLong(0)
+          writeFrame(dir, "meta", Seq((nDocs, sumDl)).toDF("n_docs",
+            "sum_dl"), s"meta/$seg", numFiles)
+        }
     } finally tf.unpersist(blocking = false): Unit
     val entries = Seq("tf", "dl", "df", "meta").map { f =>
       f -> (base.getOrElse(f, Nil) :+ s"$f/$seg")
-    }.toMap ++
-      // tombstones + the txn ledger carry across appends; an
-      // overwrite starts clean
-      base.get("tombstones").map("tombstones" -> _).toMap ++
-      base.get(IndexManifests.TxnFrame)
-        .map(IndexManifests.TxnFrame -> _).toMap
-    // per-file term ranges of the new tf/df segments ride the commit
-    // (the r15 SubstrIndex discipline): searches prune file lists from
-    // the manifest alone, zero footer opens on the serving path.
-    // Appends carry the surviving files' stats forward; an overwrite
-    // starts clean with its own.
-    val segRanges =
-      IndexManifests.fileRangeStats(spark, dir, s"tf/$seg", "term") ++
-        IndexManifests.fileRangeStats(spark, dir, s"df/$seg", "term")
-    val ranges =
-      (if (mode == SaveMode.Append) prevRanges
-       else Map.empty[String, (String, String)]) ++ segRanges
-    commit(spark, dir, v,
-      txn.fold(entries) { case (sid, b) =>
-        IndexManifests.withTxn(entries, sid, b) }, ranges)
+    }.toMap ++ base.get("tombstones").map("tombstones" -> _).toMap ++
+      IndexManifests.ledgerOf(base)
+    IndexManifests.commit(spark, dir, v,
+      IndexManifests.withTxn(entries, txn), baseRanges ++ segRanges)
     if (mode == SaveMode.Overwrite && prev.nonEmpty)
-      dropOrphanSegments(spark, dir, entries)
+      IndexManifests.dropOrphanSegments(spark, dir, Frames, entries)
   }
 
   /** Incrementally ingest a NEW batch of documents into a persisted
@@ -297,86 +272,31 @@ object Bm25Index {
       compactTier(docs.sparkSession, dir, autoCompactFanout): Unit
   }
 
-  /** SIZE-TIERED minor compaction (r15 verdict #1 — the
-    * [[SubstrIndex.compactTier]] policy on the four-frame BM25
-    * layout): pick the first full size tier of TF segments
-    * ([[IndexManifests.pickTier]]) and structurally merge them —
-    * together with the SAME-VERSION dl/df/meta segments (every
-    * build/append commits the four under one seg-N) — into one
-    * tier-up segment per frame: tf/dl rows re-clustered plain, df
+  /** SIZE-TIERED minor compaction ([[IndexManifests.TierFold]] on the
+    * four-frame BM25 layout): the first full size tier of TF segments
+    * and their same-named dl/df/meta segments (every build/append
+    * commits the four under one name) are merged into one tier-up
+    * segment per frame: tf/dl rows re-clustered plain, df and meta
     * partials summed WITHIN the tier (still partial vs the unpicked
-    * segments — readers sum across segments either way), meta
-    * partials summed likewise. Tombstones are NOT applied (their
-    * df/meta corrections stay deferred to the major [[compact]],
-    * which owns the id-keyed correction pass), so searches are
-    * bit-identical before and after. Per-trigger work is bounded by
-    * the tier's bytes, never the index; ledger and tombstones carry.
-    * Returns true when a tier merged.
+    * segments — readers sum across segments either way). Tombstones'
+    * df/meta corrections stay deferred to the major [[compact]], which
+    * owns the id-keyed correction pass, so searches are bit-identical
+    * before and after. Returns true when a tier merged.
     */
   def compactTier(spark: SparkSession, dir: String, fanout: Int = 8,
-      retainVersions: Int = 1): Boolean = {
-    import spark.implicits._
-    val (v0, entries, ranges) = requireLatestFull(spark, dir)
-    val tfSegs = entries.getOrElse("tf", Nil)
-    val sizes = IndexManifests.segmentBytes(spark, dir, tfSegs)
-    val pickedTf = IndexManifests.pickTier(sizes, fanout)
-    if (pickedTf.isEmpty) return false
-    // tf/seg-N → the same version's dl/df/meta segments
-    val versionsPicked = pickedTf.map(_.stripPrefix("tf/"))
-    def pickedOf(frame: String): Seq[String] = {
-      val live = entries.getOrElse(frame, Nil).toSet
-      versionsPicked.map(v => s"$frame/$v").filter(live.contains)
-    }
-    val companions = Seq("dl", "df", "meta").flatMap(pickedOf)
-    val pickedAll = (pickedTf ++ companions).toSet
-    // size the tier-up file count from EVERYTHING this merge rewrites
-    // — tf plus the same-version dl/df/meta companions (sizes covers
-    // tf only; the companions need their own stat pass)
-    val bytes = sizes.collect { case (s, b) if pickedAll(s) => b }.sum +
-      IndexManifests.segmentBytes(spark, dir, companions).map(_._2).sum
-    val nf = IndexManifests.tierFileCount(bytes)
-    val v = v0 + 1
-    val seg = f"seg-$v%09d"
-    def readPicked(frame: String): Option[DataFrame] = {
-      val p = pickedOf(frame)
-      if (p.isEmpty) None
-      else Some(spark.read.parquet(p.map(s => s"$dir/$s"): _*))
-    }
-    Layout.writeClustered(
-      spark.read.parquet(pickedTf.map(s => s"$dir/$s"): _*),
-      s"$dir/tf/$seg", Seq(col("term"), col("id")), nf)
-    readPicked("dl").foreach(d => Layout.writeClustered(d,
-      s"$dir/dl/$seg", Seq(col("id")), math.max(1, nf / 4)))
-    readPicked("df").foreach(d => Layout.writeClustered(
-      d.groupBy(col("term")).agg(sum(col("df")).as("df")),
-      s"$dir/df/$seg", Seq(col("term")), math.max(1, nf / 4)))
-    readPicked("meta").foreach { m =>
-      val r = m.agg(coalesce(sum("n_docs"), lit(0L)),
-        coalesce(sum("sum_dl"), lit(0L))).head()
-      Seq((r.getLong(0), r.getLong(1))).toDF("n_docs", "sum_dl")
-        .coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$dir/meta/$seg")
-    }
-    val fresh = entries ++ Seq("tf", "dl", "df", "meta").map { f =>
-      val merged =
-        if (f == "tf" || pickedOf(f).nonEmpty) Seq(s"$f/$seg") else Nil
-      f -> (entries.getOrElse(f, Nil).filterNot(pickedAll) ++ merged)
-    }.toMap
-    val segRanges =
-      IndexManifests.fileRangeStats(spark, dir, s"tf/$seg", "term") ++
-        (if (pickedOf("df").isEmpty) Map.empty
-         else IndexManifests.fileRangeStats(spark, dir, s"df/$seg",
-           "term"))
-    val keptRanges = IndexManifests.dropRangesUnder(ranges, pickedAll)
-    commit(spark, dir, v, fresh, keptRanges ++ segRanges)
-    IndexManifests.vacuum(spark, dir, Frames,
-      keepVersions = retainVersions)
-    true
-  }
+      retainVersions: Int = 1): Boolean =
+    Tier.run(spark, dir, fanout, retainVersions)
 
-  private def readTombstones(spark: SparkSession, dir: String,
-      entries: Map[String, Seq[String]]): Option[DataFrame] =
-    readFrame(spark, dir, entries, "tombstones")
+  private[graft] val Tier = new IndexManifests.TierFold(
+      Seq("tf", "dl", "df", "meta"), Frames)({ in =>
+    val rows = in.frame match {
+      case "df" => in.read.groupBy(col("term")).agg(sum(col("df")).as("df"))
+      case "meta" => in.read.agg(coalesce(sum("n_docs"), lit(0L))
+        .as("n_docs"), coalesce(sum("sum_dl"), lit(0L)).as("sum_dl"))
+      case _ => in.read
+    }
+    writeFrame(in.dir, in.frame, rows, in.out, in.files)
+  })
 
   /** Delete documents from the index — the takedown mirror of
     * [[graft.extra.Merge.delete]] for the sparse arm, LSM-style (the
@@ -411,9 +331,10 @@ object Bm25Index {
     */
   def delete(spark: SparkSession, dir: String, ids: DataFrame,
       idCol: String = "id"): Long = {
-    val (v0, entries, ranges) = requireLatestFull(spark, dir)
+    val (v0, entries, ranges) =
+      IndexManifests.requireLatestFull(spark, dir, "BM25")
     val incoming = ids.select(col(idCol).as("id")).distinct()
-    val newIds = readTombstones(spark, dir, entries)
+    val newIds = readFrame(spark, dir, entries, "tombstones")
       .fold(incoming)(t =>
         incoming.join(t.select("id"), Seq("id"), "left_anti"))
       .persist()
@@ -436,7 +357,7 @@ object Bm25Index {
           coalesce(col("dl"), lit(0L)).as("s"))
         .coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(s"$dir/tombstones/$seg")
-      commit(spark, dir, v, entries +
+      IndexManifests.commit(spark, dir, v, entries +
         ("tombstones" -> (entries.getOrElse("tombstones", Nil) :+
           s"tombstones/$seg")), ranges)
       nNew
@@ -459,7 +380,7 @@ object Bm25Index {
       val m = readFrame(spark, dir, entries, "meta").get
         .agg(coalesce(sum("n_docs"), lit(0L)).as("n"),
           coalesce(sum("sum_dl"), lit(0L)).as("s")).head()
-      val (tn, ts) = readTombstones(spark, dir, entries).map { t =>
+      val (tn, ts) = readFrame(spark, dir, entries, "tombstones").map { t =>
         val r = t.agg(coalesce(sum("n"), lit(0L)).as("n"),
           coalesce(sum("s"), lit(0L)).as("s")).head()
         (r.getLong(0), r.getLong(1))
@@ -490,58 +411,41 @@ object Bm25Index {
   def compact(spark: SparkSession, dir: String, numFiles: Int = 8,
       retainVersions: Int = 1): Unit = {
     import spark.implicits._
-    val (v0, entries) = requireLatest(spark, dir)
-    val v = v0 + 1
-    val seg = f"seg-$v%09d"
-    val tomb = readTombstones(spark, dir, entries)
+    val (v0, entries) = IndexManifests.requireLatest(spark, dir, "BM25")
+    val seg = f"seg-${v0 + 1}%09d"
+    val tomb = readFrame(spark, dir, entries, "tombstones")
+    def live(df: DataFrame) =
+      tomb.fold(df)(t => df.join(t.select("id"), Seq("id"), "left_anti"))
     val tf0 = readFrame(spark, dir, entries, "tf").get
-    val (tfKept, dfCorr) = tomb match {
-      case None => (tf0, None)
-      case Some(t) =>
-        val corr = tf0.join(t.select("id"), Seq("id")).groupBy(col("term"))
-          .agg(count(lit(1)).as("__dfdel"))
-        (tf0.join(t.select("id"), Seq("id"), "left_anti"), Some(corr))
-    }
-    Layout.writeClustered(tfKept, s"$dir/tf/$seg",
-      Seq(col("term"), col("id")), numFiles)
-    val dl0 = readFrame(spark, dir, entries, "dl").get
-    val dlKept =
-      tomb.fold(dl0)(t => dl0.join(t.select("id"), Seq("id"), "left_anti"))
-    // id-clustered multi-file, as in build — the corpus-wide dl
-    // frame never funnels through one task
-    Layout.writeClustered(dlKept, s"$dir/dl/$seg", Seq(col("id")),
-      math.max(1, numFiles / 4))
     val dfSummed = readFrame(spark, dir, entries, "df").get
       .groupBy(col("term")).agg(sum(col("df")).as("df"))
-    val dfFinal = dfCorr match {
-      case None => dfSummed
-      case Some(corr) => dfSummed
-        .join(corr, Seq("term"), "left_outer")
+    // the deferred per-term df correction: the one id-keyed pass over
+    // the term-clustered tf
+    val dfFinal = tomb.fold(dfSummed) { t =>
+      val corr = tf0.join(t.select("id"), Seq("id")).groupBy(col("term"))
+        .agg(count(lit(1)).as("__dfdel"))
+      dfSummed.join(corr, Seq("term"), "left_outer")
         .withColumn("df", col("df") - coalesce(col("__dfdel"), lit(0L)))
         .drop("__dfdel")
         .filter(col("df") > 0)
     }
-    Layout.writeClustered(dfFinal,
-      s"$dir/df/$seg", Seq(col("term")), math.max(1, numFiles / 4))
     // net of the tombstones' carried contributions — the tombstone
     // segments are dropped by the new manifest, so their correction
     // bakes in here
     val (mN, mS) = netMeta(spark, dir, entries)
-    Seq((mN, mS)).toDF("n_docs", "sum_dl")
-      .coalesce(1).write.mode(SaveMode.Overwrite)
-      .parquet(s"$dir/meta/$seg")
-    // the applied-batch ledger survives maintenance (see
-    // [[AnnIndex.compact]]'s matching carry-forward)
-    val fresh = Seq("tf", "dl", "df", "meta").map(f => f -> Seq(s"$f/$seg"))
-      .toMap ++
-      entries.get(IndexManifests.TxnFrame)
-        .map(IndexManifests.TxnFrame -> _).toMap
     // fresh per-file term stats for the merged segments — pruning
     // sharpens back up across the full term space with the layout
-    val freshRanges =
-      IndexManifests.fileRangeStats(spark, dir, s"tf/$seg", "term") ++
-        IndexManifests.fileRangeStats(spark, dir, s"df/$seg", "term")
-    commit(spark, dir, v, fresh, freshRanges)
+    val ranges = writeFrame(dir, "tf", live(tf0), s"tf/$seg", numFiles) ++
+      writeFrame(dir, "dl", live(readFrame(spark, dir, entries, "dl").get),
+        s"dl/$seg", numFiles) ++
+      writeFrame(dir, "df", dfFinal, s"df/$seg", numFiles) ++
+      writeFrame(dir, "meta", Seq((mN, mS)).toDF("n_docs", "sum_dl"),
+        s"meta/$seg", numFiles)
+    // the applied-batch ledger survives maintenance (see
+    // [[AnnIndex.compact]]'s matching carry-forward)
+    IndexManifests.commit(spark, dir, v0 + 1,
+      Seq("tf", "dl", "df", "meta").map(f => f -> Seq(s"$f/$seg")).toMap ++
+        IndexManifests.ledgerOf(entries), ranges)
     // retention window for readers pinned to recent versions — the
     // [[AnnIndex.compact]] contract shared through the manifest layer;
     // the default 1 keeps the immediate drop
@@ -581,7 +485,8 @@ object Bm25Index {
       s"maxDfRatio must be in (0, 1], got $maxDfRatio")
     import spark.implicits._
     // ONE manifest resolution for the whole call — the snapshot
-    val (_, entries, fileRanges) = requireLatestFull(spark, dir)
+    val (_, entries, fileRanges) =
+      IndexManifests.requireLatestFull(spark, dir, "BM25")
     // meta rows are per-build/append partials (log-structured layout),
     // net of tombstoned docs' carried contributions
     val (nDocs, sumDl) = netMeta(spark, dir, entries)
@@ -645,7 +550,7 @@ object Bm25Index {
     // tombstoned docs drop out of the candidates here — before the
     // rank window, so lower-ranked survivors fill the top-k (see
     // delete(): membership is exact immediately, df exact after compact)
-    val tfLive = readTombstones(spark, dir, entries)
+    val tfLive = readFrame(spark, dir, entries, "tombstones")
       .fold(tfq)(t => tfq.join(t.select("id"), Seq("id"), "left_anti"))
     val scored = tfLive
       .join(broadcast(qterms), Seq("term"))
@@ -674,7 +579,8 @@ object Bm25Index {
     require(maxDfRatio > 0.0 && maxDfRatio <= 1.0,
       s"maxDfRatio must be in (0, 1], got $maxDfRatio")
     import spark.implicits._
-    val (_, entries, fileRanges) = requireLatestFull(spark, dir)
+    val (_, entries, fileRanges) =
+      IndexManifests.requireLatestFull(spark, dir, "BM25")
     val terms0 = queryTerms.map(_.toLowerCase).distinct
     // meta/df partials aggregate at read (log-structured layout), net
     // of tombstoned docs' carried contributions
@@ -705,7 +611,7 @@ object Bm25Index {
       .filter(col("term").isin(terms: _*))
     // tombstone anti-join — see searchAll; bounded by the term-pruned
     // candidate rows, not the corpus
-    val tfq = readTombstones(spark, dir, entries)
+    val tfq = readFrame(spark, dir, entries, "tombstones")
       .fold(tfq0)(t => tfq0.join(t.select("id"), Seq("id"), "left_anti"))
     val idf = dfSlice(terms)
       .withColumn("idf",

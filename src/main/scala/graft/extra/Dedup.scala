@@ -81,6 +81,21 @@ object Dedup {
         s"$CheckpointModeKey must be local|reliable|off, got $other")
     }
 
+  /** A count-like Observation metric that `df`'s [[materialize]] job
+    * fills (the loop operators fold their convergence and size probes
+    * into that job). Under `off` no job runs, so the metric never fills
+    * and `Observation.get` would block forever: fail fast instead.
+    */
+  private[graft] def observed(df: DataFrame,
+      obs: org.apache.spark.sql.Observation, key: String): Long = {
+    if (df.sparkSession.conf.getOption(CheckpointModeKey).contains("off"))
+      throw new UnsupportedOperationException(
+        s"$CheckpointModeKey=off: this operator reads an Observation " +
+          "metric of its materialization job, which does not run in " +
+          "plan-capture mode; capture its plan in local mode")
+    obs.get(key).asInstanceOf[Long]
+  }
+
   /** Exact dedup by key: one output row per key, keeping the minimum of
     * `orderCol` as the canonical representative plus the duplicate count.
     * Deterministic (unlike `dropDuplicates`, which keeps an arbitrary

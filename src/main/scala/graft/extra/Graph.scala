@@ -127,7 +127,7 @@ object Graph {
       .union(e.select(col("dst").as("id"))).distinct()
       .observe(nodesObs, count(lit(1L)).as("n"))
       .transform(Dedup.materialize)
-    val n = nodesObs.get("n").asInstanceOf[Long]
+    val n = Dedup.observed(nodes, nodesObs, "n")
     require(n > 0, "pagerank: edges must be non-empty (no nodes found)")
     val base = (Scale * (100 - dampingPct) / 100) / n
 
@@ -271,7 +271,7 @@ object Graph {
         .select(col("id"), lit(d).cast("int").as("dist"))
         .observe(obs, count(lit(1L)).as("n"))
         .transform(Dedup.materialize)
-      if (obs.get("n").asInstanceOf[Long] == 0L) exhausted = true
+      if (Dedup.observed(next, obs, "n") == 0L) exhausted = true
       else {
         // lazy union of per-level CHECKPOINTED frames — every leg is
         // already materialized, so the union needs no re-checkpoint
@@ -376,7 +376,7 @@ object Graph {
       .repartition(col("src"))
       .observe(symObs, count(lit(1L)).as("n"))
       .transform(Dedup.materialize)
-    val symCount = symObs.get("n").asInstanceOf[Long]
+    val symCount = Dedup.observed(sym, symObs, "n")
     if (symCount == 0L)
       return sym.select(col("src").as("id"), col("src").as("component"))
     // SMALL-GRAPH fast path: the loop's per-round cost on a graph this
@@ -510,7 +510,7 @@ object Graph {
       .observe(obs1, sum(when(col("lab") =!= col("id"), 1L)
         .otherwise(0L)).as("changed"))
       .transform(Dedup.materialize)
-    var converged = obs1.get("changed").asInstanceOf[Long] == 0L
+    var converged = Dedup.observed(labels, obs1, "changed") == 0L
 
     // Pointer doubling `lab := lab(lab)` is built LAZILY on top of the
     // materialized propagate result: the hop executes inside the NEXT
@@ -546,7 +546,7 @@ object Graph {
           .otherwise(0L)).as("changed"))
         .select("id", "lab")
         .transform(Dedup.materialize)
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
+      converged = Dedup.observed(propagated, obs, "changed") == 0L
       labels = if (converged) propagated else doubled(propagated)
       i += 1
     }

@@ -1,7 +1,7 @@
 package graft.extra
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Manifest-committed versions for the persisted index layouts
   * ([[Bm25Index]], [[AnnIndex]]) — the Lucene commit-point discipline,
@@ -169,9 +169,26 @@ private[graft] object IndexManifests {
   }
 
   def requireLatest(spark: SparkSession, dir: String, what: String)
-      : (Long, Map[String, Seq[String]]) =
-    latest(spark, dir).getOrElse(throw new IllegalStateException(
+      : (Long, Map[String, Seq[String]]) = {
+    val (v, entries, _) = requireLatestFull(spark, dir, what)
+    (v, entries)
+  }
+
+  /** [[requireLatest]] plus the head's `#range=` file stats. */
+  def requireLatestFull(spark: SparkSession, dir: String, what: String)
+      : (Long, Map[String, Seq[String]], Map[String, (String, String)]) =
+    latestFull(spark, dir).getOrElse(throw new IllegalStateException(
       s"no committed $what index at $dir (missing _manifests)"))
+
+  /** One frame read as the union of its committed segments; None when
+    * the manifest lists no segment for it (e.g. no tombstones yet).
+    */
+  def readFrame(spark: SparkSession, dir: String,
+      entries: Map[String, Seq[String]], frame: String)
+      : Option[DataFrame] = {
+    val paths = entries.getOrElse(frame, Nil).map(rel => s"$dir/$rel")
+    if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
+  }
 
   /** Atomic commit via put-if-absent on the FINAL name (the same
     * commit point as [[Snapshots]]' manifest commit): the exclusive
@@ -273,6 +290,24 @@ private[graft] object IndexManifests {
     }
     entries + (TxnFrame -> (kept :+ s"$streamId:$batchId"))
   }
+
+  /** [[txnApplied]] for an optional token (None never counts as applied). */
+  def txnApplied(entries: Map[String, Seq[String]],
+      txn: Option[(String, Long)]): Boolean =
+    txn.exists { case (sid, b) => txnApplied(entries, sid, b) }
+
+  /** [[withTxn]] for an optional token (None leaves the entries as-is). */
+  def withTxn(entries: Map[String, Seq[String]],
+      txn: Option[(String, Long)]): Map[String, Seq[String]] =
+    txn.fold(entries) { case (sid, b) => withTxn(entries, sid, b) }
+
+  /** Just the ledger frame of `entries` — what a rebuild or a major
+    * compaction carries into the fresh manifest it commits, so a
+    * crash-replayed micro-batch right after it still finds its token.
+    */
+  def ledgerOf(entries: Map[String, Seq[String]])
+      : Map[String, Seq[String]] =
+    entries.get(TxnFrame).map(TxnFrame -> _).toMap
 
   /** An EMPTY data file's recorded range — min > max under both the
     * string and decimal-long orderings, so any range probe always
@@ -439,8 +474,7 @@ private[graft] object IndexManifests {
 
   /** Range stats surviving a tier merge: drop every `#range=` file
     * entry living under a merged-away segment (the tier-up segment
-    * commits fresh stats) — shared by every compactTier so the
-    * dropping rule can't silently diverge across the indexes.
+    * commits fresh stats) — applied once, in [[TierFold.commit]].
     */
   private[graft] def dropRangesUnder(
       ranges: Map[String, (String, String)],
@@ -457,6 +491,115 @@ private[graft] object IndexManifests {
   private[graft] def tierFileCount(inputBytes: Long): Int =
     math.max(1L, math.min(16L,
       (inputBytes + (96L << 20) - 1) / (96L << 20))).toInt
+
+  /** A tier fold written but not yet committed: per folded frame the
+    * picked (merged-away) segments and the `tier-` segment replacing
+    * them, plus the new segments' `#range=` stats.
+    */
+  private[graft] final case class PreparedTier(
+      picked: Map[String, Seq[String]], merged: Map[String, String],
+      ranges: Map[String, (String, String)])
+
+  /** The picked segments of one frame, for an index's merge step to
+    * rewrite into the segment `out` as about `files` output files.
+    */
+  private[graft] final case class TierInput(spark: SparkSession,
+      dir: String, frame: String, picked: Seq[String], files: Int,
+      out: String) {
+    /** One scan per picked segment, unioned by name — the read the
+      * `list_id`-partitioned layouts use for their live segments.
+      */
+    def read: DataFrame =
+      picked.map(s => spark.read.parquet(s"$dir/$s")).reduce(_ unionByName _)
+  }
+
+  /** SIZE-TIERED minor compaction, the one protocol every persisted
+    * index folds through (the classic LSM merge ladder behind each
+    * index's `autoCompactFanout`). `frames` names the folded frames,
+    * primary first; `physical` every on-disk frame the post-commit
+    * vacuum sweeps; `merge` is the index's only part — how the picked
+    * rows of one frame are rewritten (returning the new files'
+    * `#range=` stats, empty for frames without them).
+    *
+    * Two phases, so a streaming ingest can run the heavy one off its
+    * micro-batch path ([[graft.streaming.TierFolder]]):
+    *   - [[prepare]] picks the first full size tier of the primary
+    *     frame ([[pickTier]]), gathers the same-named companion
+    *     segments of the other frames (every write commits its frames
+    *     under one segment name, so they tier in lockstep), sizes the
+    *     output from all picked bytes ([[tierFileCount]]) and writes
+    *     the merged segments under `tier-` names — invisible until
+    *     committed, and never colliding with an append's `seg-` names;
+    *   - [[commit]] swaps them into the CURRENT manifest (which may
+    *     have gained appends since) only if every picked segment is
+    *     still live — a concurrent major compaction makes it return
+    *     false with nothing committed, leaving orphan files for
+    *     [[vacuum]]. The ledger, tombstones and every unpicked segment
+    *     ride the entries; merged-away files' range stats drop
+    *     ([[dropRangesUnder]]). The commit must run on the single
+    *     writer thread (the manifest write is put-if-absent).
+    *
+    * Tombstones are never applied here (only a major compaction makes
+    * deletes physical), so searches and dedup verdicts are identical
+    * before and after a fold. A now-full higher tier waits for the
+    * next trigger: cascading inside one micro-batch would concentrate
+    * the latency spike the ladder exists to spread.
+    */
+  private[graft] final class TierFold(frames: Seq[String],
+      physical: Seq[String])(
+      merge: TierInput => Map[String, (String, String)]) {
+
+    def prepare(spark: SparkSession, dir: String,
+        fanout: Int): Option[PreparedTier] =
+      latestFull(spark, dir).flatMap { case (v0, entries, _) =>
+        val sizes = segmentBytes(spark, dir,
+          entries.getOrElse(frames.head, Nil)).toMap
+        val primary = pickTier(sizes.toSeq, fanout)
+        val picked = frames.map { f =>
+          val live = entries.getOrElse(f, Nil).toSet
+          f -> primary.map(s => s"$f/${s.substring(s.indexOf('/') + 1)}")
+            .filter(live)
+        }.filter(_._2.nonEmpty)
+        if (primary.isEmpty) None
+        else {
+          val companions = picked.tail.flatMap(_._2)
+          val files = tierFileCount(primary.map(sizes).sum +
+            segmentBytes(spark, dir, companions).map(_._2).sum)
+          val merged = picked.map { case (f, _) => f -> f"$f/tier-$v0%09d" }
+            .toMap
+          val ranges = picked.flatMap { case (f, segs) =>
+            merge(TierInput(spark, dir, f, segs, files, merged(f)))
+          }.toMap
+          Some(PreparedTier(picked.toMap, merged, ranges))
+        }
+      }
+
+    def commit(spark: SparkSession, dir: String, p: PreparedTier,
+        retainVersions: Int = 1): Boolean =
+      latestFull(spark, dir).exists { case (v1, entries, ranges) =>
+        val live = p.picked.forall { case (f, segs) =>
+          segs.forall(entries.getOrElse(f, Nil).contains)
+        }
+        if (live) {
+          val swapped = p.picked.map { case (f, segs) =>
+            f -> (entries(f).filterNot(segs.toSet) :+ p.merged(f))
+          }
+          IndexManifests.commit(spark, dir, v1 + 1, entries ++ swapped,
+            dropRangesUnder(ranges, p.picked.values.flatten.toSet) ++
+              p.ranges)
+          vacuum(spark, dir, physical, keepVersions = retainVersions)
+        }
+        live
+      }
+
+    /** Prepare then commit on the caller's thread; true when a tier
+      * merged.
+      */
+    def run(spark: SparkSession, dir: String, fanout: Int,
+        retainVersions: Int): Boolean =
+      prepare(spark, dir, fanout).exists(commit(spark, dir, _,
+        retainVersions))
+  }
 
   /** STATIC range-cluster routing for a uniform-HASH LongType key
     * (r17, VERDICT r16 #5 — remove repartitionByRange's sampling pass

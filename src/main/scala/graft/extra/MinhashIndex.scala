@@ -64,12 +64,6 @@ object MinhashIndex {
         r.getAs[Int]("shingle_n"))
     }
 
-  private def requireLatestFull(spark: SparkSession, dir: String)
-      : (Long, Map[String, Seq[String]], Map[String, (String, String)]) =
-    IndexManifests.latestFull(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed minhash index at $dir (missing _manifests)"))
-
   /** (id, shingles) of a doc frame under this geometry. */
   private def setsOf(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int): DataFrame =
@@ -146,8 +140,7 @@ object MinhashIndex {
           .coalesce(1).write.mode(SaveMode.Overwrite)
           .parquet(s"$dir/meta")
       val entries = Map("bands" -> Seq(segB), "sets" -> Seq(segS)) ++
-        prev.flatMap(_._2.get(IndexManifests.TxnFrame))
-          .map(IndexManifests.TxnFrame -> _).toMap
+        IndexManifests.ledgerOf(prev.map(_._2).getOrElse(Map.empty))
       IndexManifests.commit(spark, dir, v, entries, ranges)
       IndexManifests.vacuum(spark, dir, Frames)
     } finally sets.unpersist(blocking = false): Unit
@@ -165,9 +158,9 @@ object MinhashIndex {
       dir: String, txn: Option[(String, Long)] = None,
       numFiles: Int = 2, autoCompactFanout: Int = 0): Unit = {
     val spark = batch.sparkSession
-    val (v0, entries, ranges) = requireLatestFull(spark, dir)
-    if (txn.exists { case (sid, b) =>
-        IndexManifests.txnApplied(entries, sid, b) }) return
+    val (v0, entries, ranges) =
+      IndexManifests.requireLatestFull(spark, dir, "minhash")
+    if (IndexManifests.txnApplied(entries, txn)) return
     val (numPerms, rowsPerBand, shingleN) = meta(spark, dir)
     val segB = f"bands/seg-${v0 + 1}%09d"
     val segS = f"sets/seg-${v0 + 1}%09d"
@@ -178,67 +171,31 @@ object MinhashIndex {
         writeClusteredSeg(bandsOf(sets, numPerms, rowsPerBand), dir,
           segB, "k", numFiles) ++
           writeClusteredSeg(sets, dir, segS, "d", numFiles)
-      val newBands = entries.getOrElse("bands", Nil) :+ segB
       val withSegs = entries +
-        ("bands" -> newBands) +
+        ("bands" -> (entries.getOrElse("bands", Nil) :+ segB)) +
         ("sets" -> (entries.getOrElse("sets", Nil) :+ segS))
       IndexManifests.commit(spark, dir, v0 + 1,
-        txn.fold(withSegs) { case (sid, b) =>
-          IndexManifests.withTxn(withSegs, sid, b) },
-        ranges ++ segRanges)
+        IndexManifests.withTxn(withSegs, txn), ranges ++ segRanges)
       if (autoCompactFanout > 0)
         compactTier(spark, dir, autoCompactFanout): Unit
     } finally sets.unpersist(blocking = false): Unit
   }
 
-  /** SIZE-TIERED minor compaction (r15 verdict #1 — the
-    * [[SubstrIndex.compactTier]] policy on the band-index layout):
-    * pick the first full size tier of BANDS segments
-    * ([[IndexManifests.pickTier]]) and merge them — together with the
-    * SAME-VERSION sets segments (append and build always commit the
-    * pair under one seg-N, so the frames tier in lockstep) — into one
-    * tier-up clustered segment per frame. Rows are plain (no partial
-    * merge), tombstones are NOT applied (the probe-path anti-join
-    * stays; only the major [[compact]] makes deletes physical), the
-    * ledger carries, merged-away files' `#range=` stats drop and the
-    * tier-up segments commit fresh ones. Per-trigger work is bounded
-    * by the tier's bytes, never the index. Returns true when a tier
-    * merged.
+  /** SIZE-TIERED minor compaction ([[IndexManifests.TierFold]] on the
+    * band-index layout): the first full size tier of BANDS segments
+    * and their same-named sets segments (append and build commit the
+    * pair under one name, so the frames tier in lockstep) are
+    * re-clustered into one tier-up segment per frame. Rows are plain
+    * (no partial merge); the probe-path tombstone anti-join stays.
+    * Returns true when a tier merged.
     */
   def compactTier(spark: SparkSession, dir: String, fanout: Int = 8,
-      retainVersions: Int = 1): Boolean = {
-    val (v0, entries, ranges) = requireLatestFull(spark, dir)
-    val bandSegs = entries.getOrElse("bands", Nil)
-    val sizes = IndexManifests.segmentBytes(spark, dir, bandSegs)
-    val pickedB = IndexManifests.pickTier(sizes, fanout)
-    if (pickedB.isEmpty) return false
-    val setSegs = entries.getOrElse("sets", Nil).toSet
-    val pickedS = pickedB.map(_.replaceFirst("^bands/", "sets/"))
-      .filter(setSegs.contains)
-    val pickedSet = (pickedB ++ pickedS).toSet
-    val bytes =
-      sizes.collect { case (s, b) if pickedSet(s) => b }.sum +
-        IndexManifests.segmentBytes(spark, dir, pickedS).map(_._2).sum
-    val nf = IndexManifests.tierFileCount(bytes)
-    val segB = f"bands/seg-${v0 + 1}%09d"
-    val segS = f"sets/seg-${v0 + 1}%09d"
-    def readSegs(segs: Seq[String]) =
-      spark.read.parquet(segs.map(s => s"$dir/$s"): _*)
-    val segRanges =
-      writeClusteredSeg(readSegs(pickedB), dir, segB, "k", nf) ++
-        (if (pickedS.isEmpty) Map.empty
-         else writeClusteredSeg(readSegs(pickedS), dir, segS, "d", nf))
-    val keptRanges = IndexManifests.dropRangesUnder(ranges, pickedSet)
-    val fresh = entries +
-      ("bands" -> (bandSegs.filterNot(pickedSet) :+ segB)) +
-      ("sets" -> (entries.getOrElse("sets", Nil).filterNot(pickedSet) ++
-        (if (pickedS.isEmpty) Nil else Seq(segS))))
-    IndexManifests.commit(spark, dir, v0 + 1, fresh,
-      keptRanges ++ segRanges)
-    IndexManifests.vacuum(spark, dir, Frames,
-      keepVersions = retainVersions)
-    true
-  }
+      retainVersions: Int = 1): Boolean =
+    Tier.run(spark, dir, fanout, retainVersions)
+
+  private[graft] val Tier = new IndexManifests.TierFold(
+      Seq("bands", "sets"), Frames)(in => writeClusteredSeg(in.read,
+    in.dir, in.out, if (in.frame == "bands") "k" else "d", in.files))
 
   /** Re-cluster both frames into one segment each (rows are plain —
     * no partial merge needed), making tombstoned deletes PHYSICAL
@@ -248,12 +205,13 @@ object MinhashIndex {
     */
   def compact(spark: SparkSession, dir: String,
       retainVersions: Int = 1, numFiles: Int = 8): Unit = {
-    val (v0, entries, _) = requireLatestFull(spark, dir)
-    val tomb = readTombstones(spark, dir, entries)
+    val (v0, entries, _) =
+      IndexManifests.requireLatestFull(spark, dir, "minhash")
+    val tomb = IndexManifests.readFrame(spark, dir, entries, "tombstones")
     def readAll(frame: String) = {
-      val segs = entries.getOrElse(frame, Nil)
-      require(segs.nonEmpty, s"no committed $frame segments at $dir")
-      val df = spark.read.parquet(segs.map(s => s"$dir/$s"): _*)
+      val df = IndexManifests.readFrame(spark, dir, entries, frame)
+        .getOrElse(throw new IllegalArgumentException(
+          s"no committed $frame segments at $dir"))
       tomb.fold(df)(t => df.join(t.select("d"), Seq("d"), "left_anti"))
     }
     val segB = f"bands/seg-${v0 + 1}%09d"
@@ -261,10 +219,8 @@ object MinhashIndex {
     val ranges =
       writeClusteredSeg(readAll("bands"), dir, segB, "k", numFiles) ++
         writeClusteredSeg(readAll("sets"), dir, segS, "d", numFiles)
-    val fresh = Map("bands" -> Seq(segB), "sets" -> Seq(segS)) ++
-      entries.get(IndexManifests.TxnFrame)
-        .map(IndexManifests.TxnFrame -> _).toMap
-    IndexManifests.commit(spark, dir, v0 + 1, fresh, ranges)
+    IndexManifests.commit(spark, dir, v0 + 1, Map("bands" -> Seq(segB),
+      "sets" -> Seq(segS)) ++ IndexManifests.ledgerOf(entries), ranges)
     IndexManifests.vacuum(spark, dir, Frames,
       keepVersions = retainVersions)
   }
@@ -288,13 +244,12 @@ object MinhashIndex {
     */
   def delete(spark: SparkSession, dir: String, ids: DataFrame,
       idCol: String = "d"): Long = {
-    val (v0, entries, ranges) = requireLatestFull(spark, dir)
+    val (v0, entries, ranges) =
+      IndexManifests.requireLatestFull(spark, dir, "minhash")
     val incoming = ids.select(col(idCol).as("d")).distinct()
-    val prior = entries.getOrElse("tombstones", Nil)
-      .map(s => s"$dir/$s")
-    val newIds = (if (prior.isEmpty) incoming
-      else incoming.join(spark.read.parquet(prior: _*).select("d"),
-        Seq("d"), "left_anti"))
+    val newIds = IndexManifests.readFrame(spark, dir, entries, "tombstones")
+      .fold(incoming)(t =>
+        incoming.join(t.select("d"), Seq("d"), "left_anti"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val nNew = newIds.count()
@@ -309,12 +264,6 @@ object MinhashIndex {
     } finally newIds.unpersist(blocking = false): Unit
   }
 
-  private def readTombstones(spark: SparkSession, dir: String,
-      entries: Map[String, Seq[String]]): Option[DataFrame] = {
-    val paths = entries.getOrElse("tombstones", Nil).map(s => s"$dir/$s")
-    if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
-  }
-
   private def parseLong(s: String): Option[Any] =
     s.toLongOption.map(java.lang.Long.valueOf(_): Any)
 
@@ -324,7 +273,8 @@ object MinhashIndex {
   private[graft] def probeBandFiles(spark: SparkSession, dir: String,
       batch: DataFrame, idCol: String, textCol: String)
       : (Seq[String], Int) = {
-    val (_, entries, ranges) = requireLatestFull(spark, dir)
+    val (_, entries, ranges) =
+      IndexManifests.requireLatestFull(spark, dir, "minhash")
     val (numPerms, rowsPerBand, shingleN) = meta(spark, dir)
     val keys = bandsOf(setsOf(batch, idCol, textCol, shingleN),
       numPerms, rowsPerBand).select(col("k")).distinct()
@@ -355,7 +305,8 @@ object MinhashIndex {
   def dedupBatch(spark: SparkSession, dir: String, batch: DataFrame,
       idCol: String, textCol: String, threshold: Double = 0.5,
       maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame = {
-    val (_, entries, ranges) = requireLatestFull(spark, dir)
+    val (_, entries, ranges) =
+      IndexManifests.requireLatestFull(spark, dir, "minhash")
     val (numPerms, rowsPerBand, shingleN) = meta(spark, dir)
     val batchSets = setsOf(batch, idCol, textCol, shingleN)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -400,7 +351,8 @@ object MinhashIndex {
       // widths) here — before anything downstream, so a deleted doc
       // can never anchor a verdict; the anti-join is bounded by the
       // MATCHED rows, never the corpus (see delete())
-      val matched = readTombstones(spark, dir, entries)
+      val matched = IndexManifests.readFrame(spark, dir, entries,
+          "tombstones")
         .fold(matched0)(t =>
           matched0.join(t.select("d"), Seq("d"), "left_anti"))
       // union of matched corpus postings + batch rows: every bucket a

@@ -107,10 +107,8 @@ object SemanticIndex {
     val v = prev.map(_._1).getOrElse(0L) + 1
     val seg = f"vectors/seg-$v%09d"
     writeSegment(assign(emb, idCol, vecCol, cents), dir, seg)
-    val entries = Map("vectors" -> Seq(seg)) ++
-      prev.flatMap(_._2.get(IndexManifests.TxnFrame))
-        .map(IndexManifests.TxnFrame -> _).toMap
-    IndexManifests.commit(spark, dir, v, entries)
+    IndexManifests.commit(spark, dir, v, Map("vectors" -> Seq(seg)) ++
+      IndexManifests.ledgerOf(prev.map(_._2).getOrElse(Map.empty)))
     IndexManifests.vacuum(spark, dir, Frames)
   }
 
@@ -143,9 +141,8 @@ object SemanticIndex {
       dir: String, txn: Option[(String, Long)] = None,
       autoCompactFanout: Int = 0): Boolean = {
     val spark = batch.sparkSession
-    val (v0, entries, _) = requireLatestFull(spark, dir)
-    if (txn.exists { case (sid, b) =>
-        IndexManifests.txnApplied(entries, sid, b) }) return false
+    val (v0, entries) = IndexManifests.requireLatest(spark, dir, "semantic")
+    if (IndexManifests.txnApplied(entries, txn)) return false
     // an EMPTY batch must no-op (without advancing the ledger — a
     // replay re-lands here and no-ops again): a partitionBy write of
     // an empty frame produces a file-less directory whose committed
@@ -156,43 +153,27 @@ object SemanticIndex {
     val cents = readCodebook(spark, dir)
     val seg = f"vectors/seg-${v0 + 1}%09d"
     writeSegment(assign(batch, idCol, vecCol, cents), dir, seg)
-    val newSegs = entries.getOrElse("vectors", Nil) :+ seg
-    val withSeg = entries + ("vectors" -> newSegs)
-    IndexManifests.commit(spark, dir, v0 + 1,
-      txn.fold(withSeg) { case (sid, b) =>
-        IndexManifests.withTxn(withSeg, sid, b) })
+    IndexManifests.commit(spark, dir, v0 + 1, IndexManifests.withTxn(
+      entries + ("vectors" -> (entries.getOrElse("vectors", Nil) :+ seg)),
+      txn))
     if (autoCompactFanout > 0)
       compactTier(spark, dir, autoCompactFanout): Unit
     true
   }
 
-  /** SIZE-TIERED minor compaction (r15 verdict #1 — the
-    * [[AnnIndex.compactTier]] policy on the cluster-partitioned
-    * vector layout): merge ONLY the first full size tier of vector
-    * segments into one tier-up `list_id`-partitioned segment — work
-    * bounded by the tier's bytes, never the index; the ledger and
-    * every other frame carry through. Returns true when a tier
-    * merged. [[compact]] stays the manual full merge.
+  /** SIZE-TIERED minor compaction ([[IndexManifests.TierFold]] on the
+    * cluster-partitioned vector layout): merge ONLY the first full
+    * size tier of vector segments into one tier-up `list_id`-
+    * partitioned segment — work bounded by the tier's bytes, never the
+    * index. Returns true when a tier merged. [[compact]] stays the
+    * manual full merge.
     */
   def compactTier(spark: SparkSession, dir: String, fanout: Int = 8,
-      retainVersions: Int = 1): Boolean = {
-    val (v0, entries, _) = requireLatestFull(spark, dir)
-    val segs = entries.getOrElse("vectors", Nil)
-    val sizes = IndexManifests.segmentBytes(spark, dir, segs)
-    val picked = IndexManifests.pickTier(sizes, fanout)
-    if (picked.isEmpty) return false
-    val pickedSet = picked.toSet
-    val seg = f"vectors/seg-${v0 + 1}%09d"
-    writeSegment(
-      picked.map(s => spark.read.parquet(s"$dir/$s"))
-        .reduce(_ unionByName _),
-      dir, seg)
-    IndexManifests.commit(spark, dir, v0 + 1,
-      entries + ("vectors" -> (segs.filterNot(pickedSet) :+ seg)))
-    IndexManifests.vacuum(spark, dir, Frames,
-      keepVersions = retainVersions)
-    true
-  }
+      retainVersions: Int = 1): Boolean =
+    Tier.run(spark, dir, fanout, retainVersions)
+
+  private[graft] val Tier = new IndexManifests.TierFold(Seq("vectors"),
+      Frames)({ in => writeSegment(in.read, in.dir, in.out); Map.empty })
 
   /** Merge accumulated segments into one (rows are plain — no partial
     * merge), tombstoned deletes made PHYSICAL (rows dropped, the
@@ -201,11 +182,12 @@ object SemanticIndex {
     */
   def compact(spark: SparkSession, dir: String,
       retainVersions: Int = 1): Unit = {
-    val (v0, entries, _) = requireLatestFull(spark, dir)
-    val segs = entries.getOrElse("vectors", Nil)
-    require(segs.nonEmpty, s"no committed vector segments at $dir")
-    val live = readVectors(spark, dir, entries).get
-    val survivors = readTombstones(spark, dir, entries)
+    val (v0, entries) = IndexManifests.requireLatest(spark, dir, "semantic")
+    val live = readVectors(spark, dir, entries).getOrElse(
+      throw new IllegalArgumentException(
+        s"no committed vector segments at $dir"))
+    val survivors = IndexManifests.readFrame(spark, dir, entries,
+        "tombstones")
       .fold(live)(t => live.join(t.select("d"), Seq("d"), "left_anti"))
     // a FULL takedown leaves no survivors, and a partitionBy write of
     // an empty frame is a file-less directory that would poison every
@@ -213,18 +195,12 @@ object SemanticIndex {
     // failure, reached through compact) — commit a manifest with NO
     // vectors frame instead; dedupBatch/append handle the empty index
     // (everything is a keeper / the next append re-seeds segments)
-    val fresh: Map[String, Seq[String]] =
-      if (survivors.isEmpty)
-        entries.get(IndexManifests.TxnFrame)
-          .map(IndexManifests.TxnFrame -> _).toMap
-      else {
-        val seg = f"vectors/seg-${v0 + 1}%09d"
-        writeSegment(survivors, dir, seg)
-        Map("vectors" -> Seq(seg)) ++
-          entries.get(IndexManifests.TxnFrame)
-            .map(IndexManifests.TxnFrame -> _).toMap
-      }
-    IndexManifests.commit(spark, dir, v0 + 1, fresh)
+    val seg = f"vectors/seg-${v0 + 1}%09d"
+    val vectors =
+      if (survivors.isEmpty) Map.empty[String, Seq[String]]
+      else { writeSegment(survivors, dir, seg); Map("vectors" -> Seq(seg)) }
+    IndexManifests.commit(spark, dir, v0 + 1,
+      vectors ++ IndexManifests.ledgerOf(entries))
     IndexManifests.vacuum(spark, dir, Frames,
       keepVersions = retainVersions)
   }
@@ -244,9 +220,9 @@ object SemanticIndex {
     */
   def delete(spark: SparkSession, dir: String, ids: DataFrame,
       idCol: String = "d"): Long = {
-    val (v0, entries, _) = requireLatestFull(spark, dir)
+    val (v0, entries) = IndexManifests.requireLatest(spark, dir, "semantic")
     val incoming = ids.select(col(idCol).as("d")).distinct()
-    val newIds = readTombstones(spark, dir, entries)
+    val newIds = IndexManifests.readFrame(spark, dir, entries, "tombstones")
       .fold(incoming)(t =>
         incoming.join(t.select("d"), Seq("d"), "left_anti"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -262,12 +238,6 @@ object SemanticIndex {
     } finally newIds.unpersist(blocking = false): Unit
   }
 
-  private def readTombstones(spark: SparkSession, dir: String,
-      entries: Map[String, Seq[String]]): Option[DataFrame] = {
-    val paths = entries.getOrElse("tombstones", Nil).map(s => s"$dir/$s")
-    if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
-  }
-
   /** Union of the live segments' cluster-partitioned scans —
     * `list_id` comes back as the partition column (int), cast to
     * long; a `list_id IN (…)` filter on this frame partition-prunes
@@ -281,12 +251,6 @@ object SemanticIndex {
           col("d"), col("v"), col("nrm")))
       .reduceOption(_ unionByName _)
 
-  private def requireLatestFull(spark: SparkSession, dir: String)
-      : (Long, Map[String, Seq[String]], Map[String, (String, String)]) =
-    IndexManifests.latestFull(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed semantic index at $dir (missing _manifests)"))
-
   /** Per-NEW-document semantic verdicts against the index + batch-mates:
     * (idCol, `cluster_id`, `is_dup`, `dup_of` — smallest matching
     * lower id, null for keepers, `best_cos` — that match's rounded
@@ -296,7 +260,7 @@ object SemanticIndex {
   def dedupBatch(spark: SparkSession, dir: String, batch: DataFrame,
       idCol: String, vecCol: String, threshold: Double,
       broadcastBudgetBytes: Long = 64L << 20): DataFrame = {
-    val (_, entries, _) = requireLatestFull(spark, dir)
+    val (_, entries) = IndexManifests.requireLatest(spark, dir, "semantic")
     val cents = readCodebook(spark, dir)
     // pinned: the assignment feeds the per-chunk touched-cluster
     // collects, the corpus probes' broadcasts, and BOTH sides of the
@@ -325,7 +289,7 @@ object SemanticIndex {
     // tombstoned docs drop out of the corpus probe (delete()): a
     // deleted doc can never anchor a verdict — bit-identical to an
     // index built without it
-    val tomb = readTombstones(spark, dir, entries)
+    val tomb = IndexManifests.readFrame(spark, dir, entries, "tombstones")
     val hits = (0 until numChunks).flatMap { c =>
       val probe =
         if (numChunks == 1) ba

@@ -237,8 +237,7 @@ object SubstrIndex {
     // compact's carry-forward: dropping it would let a stream replay
     // re-apply its last batch against the rebuilt corpus
     val entries = Map("grams" -> Seq(seg)) ++
-      prev.flatMap(_._2.get(IndexManifests.TxnFrame))
-        .map(IndexManifests.TxnFrame -> _).toMap
+      IndexManifests.ledgerOf(prev.map(_._2).getOrElse(Map.empty))
     IndexManifests.commit(spark, dir, v, entries, ranges)
     IndexManifests.vacuum(spark, dir, Frames)
   }
@@ -308,9 +307,9 @@ object SubstrIndex {
       positioned: DataFrame, idCol: String,
       txn: Option[(String, Long)], numFiles: Int)
       : Option[PreparedAppend] = {
-    val (v0, entries, ranges) = requireLatestFull(spark, dir)
-    if (txn.exists { case (sid, b) =>
-        IndexManifests.txnApplied(entries, sid, b) }) return None
+    val (v0, entries, ranges) =
+      IndexManifests.requireLatestFull(spark, dir, "substr")
+    if (IndexManifests.txnApplied(entries, txn)) return None
     val seg = f"grams/seg-${v0 + 1}%09d"
     val segRanges = staticClusteredPartials(positioned, idCol,
         numFiles) match {
@@ -336,101 +335,42 @@ object SubstrIndex {
   private[graft] def commitAppend(spark: SparkSession, dir: String,
       p: PreparedAppend, txn: Option[(String, Long)],
       autoCompactFanout: Int): Unit = {
-    val newSegs = p.entries.getOrElse("grams", Nil) :+ p.seg
-    val withSeg = p.entries + ("grams" -> newSegs)
-    IndexManifests.commit(spark, dir, p.nextVersion,
-      txn.fold(withSeg) { case (sid, b) =>
-        IndexManifests.withTxn(withSeg, sid, b) },
-      p.ranges ++ p.segRanges)
+    IndexManifests.commit(spark, dir, p.nextVersion, IndexManifests.withTxn(
+      p.entries + ("grams" -> (p.entries.getOrElse("grams", Nil) :+ p.seg)),
+      txn), p.ranges ++ p.segRanges)
     if (autoCompactFanout > 0)
       compactTier(spark, dir, autoCompactFanout): Unit
   }
 
-  /** SIZE-TIERED minor compaction (r15 verdict #1 — the auto policy
-    * behind `autoCompactFanout`): merge ONLY the first full size tier
-    * of gram segments ([[IndexManifests.pickTier]] — `fanout` segments
-    * within 4× of each other, smallest tier first) into one tier-up
-    * range-clustered segment, leaving every other segment untouched.
-    * Per-trigger work is bounded by the tier's bytes (fanout
-    * micro-batch segments at tier 0), never the index — the classic
-    * LSM merge ladder, vs the old threshold→[[compact]] policy's
-    * O(index) inline merge every ~threshold batches (the r15
-    * `streaming_ann_ingest` stall). No tier full → no-op. A now-full
-    * HIGHER tier is deliberately left for the NEXT append's trigger —
-    * cascading inside one micro-batch would re-concentrate the
-    * latency spike the ladder exists to spread. The txn ledger and all
-    * other frames carry through; merged-away files' `#range=` stats
-    * drop and the tier-up segment commits fresh ones, so file pruning
-    * never consults a dead file. [[compact]] remains the manual FULL
-    * (major) compaction. Returns true when a tier merged.
+  /** SIZE-TIERED minor compaction (the auto policy behind
+    * `autoCompactFanout`, [[IndexManifests.TierFold]]): merge ONLY the
+    * first full size tier of gram segments into one tier-up
+    * range-clustered segment ([[mergePartials]] over the tier's
+    * partial rows), leaving every other segment untouched — per-trigger
+    * work bounded by the tier's bytes, never the index. The tier-up
+    * segment commits fresh `#range=` stats, so file pruning never
+    * consults a dead file. [[compact]] remains the manual FULL (major)
+    * compaction. Returns true when a tier merged.
     */
   def compactTier(spark: SparkSession, dir: String, fanout: Int = 8,
       retainVersions: Int = 1): Boolean =
-    prepareCompactTier(spark, dir, fanout) match {
-      case None => false
-      case Some(p) => commitPreparedTier(spark, dir, p, retainVersions)
-    }
+    Tier.run(spark, dir, fanout, retainVersions)
 
-  /** Phase 1 of the two-phase [[compactTier]] (r17 — the
-    * [[prepareAppend]] split applied to compaction, mirroring
-    * [[AnnIndex.prepareCompactTier]]): pick the first full size tier
-    * and WRITE the merged tier-up segment (plus its `#range=` stats)
-    * without committing — invisible until [[commitPreparedTier]], so
-    * a streaming ingest can run the heavy merge OFF the micro-batch
-    * path, concurrent with later batches, and fold it in with one
-    * cheap manifest write on the batch thread. `tier-` name, so a
-    * concurrent append's `seg-` write can never collide; a dropped
-    * prepare leaves orphan files for [[compact]]/vacuum to sweep.
+  private[graft] val Tier = new IndexManifests.TierFold(Frames, Frames)(in =>
+    writeSegment(mergePartials(in.read, in.files), in.dir, in.out))
+
+  /** Merge (g, n, d, p) partial rows into `numFiles` range-clustered
+    * files — the one-exchange shape of [[clusteredPartials]]: range-
+    * partition first, merge (sum n, min (d, p)) inside the partitions.
     */
-  private[graft] final case class PreparedTier(picked: Seq[String],
-      seg: String, segRanges: Map[String, (String, String)])
-
-  private[graft] def prepareCompactTier(spark: SparkSession, dir: String,
-      fanout: Int = 8): Option[PreparedTier] = {
-    val (v0, entries, _) = requireLatestFull(spark, dir)
-    val segs = entries.getOrElse("grams", Nil)
-    val sizes = IndexManifests.segmentBytes(spark, dir, segs)
-    val picked = IndexManifests.pickTier(sizes, fanout)
-    if (picked.isEmpty) return None
-    val pickedSet = picked.toSet
-    val bytes = sizes.collect { case (s, b) if pickedSet(s) => b }.sum
-    val seg = f"grams/tier-$v0%09d"
-    // same one-exchange merge shape as [[compact]], over the picked
-    // tier's partial rows only
-    val merged = spark.read.parquet(picked.map(s => s"$dir/$s"): _*)
-      .repartitionByRange(IndexManifests.tierFileCount(bytes), col("g"))
+  private def mergePartials(partials: DataFrame, numFiles: Int): DataFrame =
+    partials.repartitionByRange(numFiles, col("g"))
       .groupBy(col("g"))
       .agg(sum(col("n")).as("n"),
         min(struct(col("d"), col("p"))).as("__c"))
       .select(col("g"), col("n"), col("__c.d").as("d"),
         col("__c.p").as("p"))
       .sortWithinPartitions(col("g"))
-    Some(PreparedTier(picked, seg, writeSegment(merged, dir, seg)))
-  }
-
-  /** Phase 2: swap the prepared tier into the CURRENT manifest (which
-    * may have gained appended segments — and their ranges — since
-    * phase 1; appends only add, so the picked segments are still
-    * live). Bails out without committing if any picked segment
-    * vanished (a concurrent major [[compact]]). Must run on the single
-    * writer thread. Merged-away files' `#range=` stats drop and the
-    * tier-up segment commits the fresh ones, so file pruning never
-    * consults a dead file — exactly the single-phase fold's contract.
-    */
-  private[graft] def commitPreparedTier(spark: SparkSession, dir: String,
-      p: PreparedTier, retainVersions: Int = 1): Boolean = {
-    val (v1, entries, ranges) = requireLatestFull(spark, dir)
-    val segs = entries.getOrElse("grams", Nil)
-    if (!p.picked.forall(segs.contains)) return false
-    val pickedSet = p.picked.toSet
-    val keptRanges = IndexManifests.dropRangesUnder(ranges, pickedSet)
-    IndexManifests.commit(spark, dir, v1 + 1,
-      entries + ("grams" -> (segs.filterNot(pickedSet) :+ p.seg)),
-      keptRanges ++ p.segRanges)
-    IndexManifests.vacuum(spark, dir, Frames,
-      keepVersions = retainVersions)
-    true
-  }
 
   /** Streaming ingest fast path: append a CLEANED batch's grams
     * REUSING the raw batch's pinned positioned grams for every doc the
@@ -481,12 +421,6 @@ object SubstrIndex {
     prepareAppend(spark, dir, positioned, idCol, txn, numFiles)
   }
 
-  private def requireLatestFull(spark: SparkSession, dir: String)
-      : (Long, Map[String, Seq[String]], Map[String, (String, String)]) =
-    IndexManifests.latestFull(spark, dir).getOrElse(
-      throw new IllegalStateException(
-        s"no committed substr index at $dir (missing _manifests)"))
-
   /** The files [[dedupBatch]] will open for a given batch-gram frame:
     * range-bearing files survive only if some batch key falls in their
     * recorded [min, max] ([[Merge.pruneRanged]] — one broadcast range
@@ -516,7 +450,8 @@ object SubstrIndex {
   private[graft] def probePostingFiles(spark: SparkSession, dir: String,
       batch: DataFrame, idCol: String, textCol: String)
       : (Seq[String], Int) = {
-    val (_, entries, ranges) = requireLatestFull(spark, dir)
+    val (_, entries, ranges) =
+      IndexManifests.requireLatestFull(spark, dir, "substr")
     val (k, hashed) = meta(spark, dir)
     val batchKeys = Dedup.positionedGrams(batch, idCol, textCol, k,
       hashed).select(col("__g").as("g")).distinct()
@@ -531,25 +466,16 @@ object SubstrIndex {
     */
   def compact(spark: SparkSession, dir: String,
       retainVersions: Int = 1, numFiles: Int = 8): Unit = {
-    val (v0, entries, _) = requireLatestFull(spark, dir)
+    val (v0, entries, _) =
+      IndexManifests.requireLatestFull(spark, dir, "substr")
     val segs = entries.getOrElse("grams", Nil)
     require(segs.nonEmpty, s"no committed gram segments at $dir")
     val seg = f"grams/seg-${v0 + 1}%09d"
-    // same one-exchange shape as clusteredPartials, over the (g,n,d,p)
-    // partial rows: range-partition first, merge inside the partitions
-    val merged = spark.read.parquet(segs.map(s => s"$dir/$s"): _*)
-      .repartitionByRange(numFiles, col("g"))
-      .groupBy(col("g"))
-      .agg(sum(col("n")).as("n"),
-        min(struct(col("d"), col("p"))).as("__c"))
-      .select(col("g"), col("n"), col("__c.d").as("d"),
-        col("__c.p").as("p"))
-      .sortWithinPartitions(col("g"))
-    val ranges = writeSegment(merged, dir, seg)
-    val fresh = Map("grams" -> Seq(seg)) ++
-      entries.get(IndexManifests.TxnFrame)
-        .map(IndexManifests.TxnFrame -> _).toMap
-    IndexManifests.commit(spark, dir, v0 + 1, fresh, ranges)
+    val ranges = writeSegment(mergePartials(
+      IndexManifests.readFrame(spark, dir, entries, "grams").get, numFiles),
+      dir, seg)
+    IndexManifests.commit(spark, dir, v0 + 1,
+      Map("grams" -> Seq(seg)) ++ IndexManifests.ledgerOf(entries), ranges)
     IndexManifests.vacuum(spark, dir, Frames,
       keepVersions = retainVersions)
   }
@@ -597,7 +523,8 @@ object SubstrIndex {
       minSpanTokens: Int, pin: DataFrame => DataFrame,
       probeCutoff: Int = 8, pinned: Boolean = false)
       : (DataFrame, DataFrame) = {
-    val (_, entries, ranges) = requireLatestFull(spark, dir)
+    val (_, entries, ranges) =
+      IndexManifests.requireLatestFull(spark, dir, "substr")
     val (k, hashed) = meta(spark, dir)
     val grams = pin(
       Dedup.positionedGrams(batch, idCol, textCol, k, hashed))

@@ -87,9 +87,9 @@ object AnnIngest {
     * that tier ([[graft.extra.AnnIndex.compactTier]]) — per-trigger
     * work bounded by the tier (usually `fanout` micro-batch
     * segments), never the index, so search fan-in stays
-    * O(fanout · log N) with no operator in the loop and no O(index)
-    * micro-batch stall; the txn ledger carries through the fold so
-    * replay safety is unchanged.
+    * O(fanout · log N) with no operator in the loop; the fold runs off
+    * the batch path ([[TierFolder]]) and carries the txn ledger
+    * through, so replay safety is unchanged.
     */
   def start(curated: DataFrame, indexDir: String, checkpointDir: String,
       dim: Int = 64, idCol: String = "doc_id", textCol: String = "text",
@@ -105,21 +105,11 @@ object AnnIngest {
     // is the encode projection + one file-per-touched-list append.
     val codebooks = AnnIndex.readCodebooks(curated.sparkSession, indexDir)
     val streamId = streamIdOf("ann", checkpointDir)
-    // ASYNC tier folding (r17, VERDICT r16 #6 — the max_batch spike was
-    // the batch that drew the tier merge): the heavy half of the fold
-    // (read the tier + rewrite one tier-up segment, invisible until
-    // committed) runs on a daemon thread CONCURRENTLY with later
-    // micro-batches — guide §2.6, overlap independent jobs — and the
-    // batch thread only pays the cheap manifest swap
-    // ([[AnnIndex.commitPreparedTier]]) once the merge is ready. The
-    // manifest writer stays single-threaded (the batch thread), so the
-    // put-if-absent commit never races; a pending fold dropped at
-    // stream end leaves only orphan files for compact/vacuum to sweep.
-    val foldPool = java.util.concurrent.Executors.newSingleThreadExecutor(
-      r => { val t = new Thread(r, "ann-tier-fold"); t.setDaemon(true); t })
-    val pendingFold = new java.util.concurrent.atomic.AtomicReference[
-      java.util.concurrent.Future[Option[AnnIndex.PreparedTier]]]()
-    curated
+    // the fold runs in the background ([[TierFolder]]): the batch
+    // thread appends without folding and only lands finished merges
+    val folder = new TierFolder("ann", AnnIndex.Tier, indexDir,
+      autoCompactFanout)
+    folder.bind(curated
       .select(col(idCol), embedStub(col(textCol), dim).as("embedding"))
       .writeStream
       .outputMode("append")
@@ -131,30 +121,14 @@ object AnnIngest {
         // batch keeps parallel writers — the single-task funnel was
         // measured 43µs/row at 200k-row batches vs ~26µs here, and
         // the file count is one per touched list either way
-        if (sinkGate()) {
-          val spark = df.sparkSession
-          val f = pendingFold.get()
-          if (f != null && f.isDone) {
-            pendingFold.set(null)
-            // harvest a finished background merge first: one manifest
-            // write; a failed prepare is dropped (orphan files only)
-            try f.get().foreach(p =>
-              AnnIndex.commitPreparedTier(spark, indexDir, p): Unit)
-            catch { case _: java.util.concurrent.ExecutionException => () }
+        if (sinkGate())
+          folder.around(df.sparkSession) {
+            AnnIndex.appendIvfPq(df.sparkSession, indexDir, df, idCol,
+              "embedding", codebooks = Some(codebooks),
+              txn = Some((streamId, batchId)))
           }
-          AnnIndex.appendIvfPq(spark, indexDir, df, idCol,
-            "embedding", codebooks = Some(codebooks),
-            txn = Some((streamId, batchId)), autoCompactFanout = 0)
-          if (autoCompactFanout > 0 && pendingFold.get() == null)
-            pendingFold.set(foldPool.submit(
-              new java.util.concurrent.Callable[Option[AnnIndex.PreparedTier]] {
-                def call(): Option[AnnIndex.PreparedTier] =
-                  AnnIndex.prepareCompactTier(spark, indexDir,
-                    autoCompactFanout)
-              }))
-        }
       }
-      .start()
+      .start())
   }
 
   /** Stable ledger identity for a stream: the checkpoint location IS

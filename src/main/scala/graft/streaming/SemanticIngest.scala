@@ -67,7 +67,7 @@ object SemanticIngest {
 
   /** Start the ingest over an embedded (doc_id, embedding, …) stream.
     * `sinkGate` is the graceful-drain hook; `autoCompactFanout`
-    * (default 16) the ingest-side maintenance guard — both the
+    * (default 8) the ingest-side maintenance guard — both the
     * [[SubstrIngest]] contracts.
     */
   def start(embedded: DataFrame, indexDir: String, outDir: String,

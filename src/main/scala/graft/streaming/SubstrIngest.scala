@@ -129,16 +129,9 @@ object SubstrIngest {
     * the count passes the threshold, keeping the per-batch range-probe
     * size and read fan-in bounded with no operator in the loop
     * (r14 verdict #5; the fold carries the txn ledger through, so
-    * replay safety is unchanged). r17 (the [[AnnIngest.start]]
-    * discipline): the HEAVY half of the fold — reading the tier and
-    * rewriting one tier-up segment, invisible until committed — runs
-    * on a daemon thread concurrent with later micro-batches (guide
-    * §2.6, overlap independent jobs); the batch thread only pays the
-    * cheap manifest swap once the merge is ready, so a fold no longer
-    * stalls the batch that happened to trigger it (the substr block's
-    * max-batch spike). The manifest writer stays single-threaded (the
-    * batch thread); a pending fold dropped at stream end leaves only
-    * orphan files for compact/vacuum to sweep.
+    * replay safety is unchanged). The fold runs off the batch path
+    * ([[TierFolder]]), so it no longer stalls the batch that happened
+    * to trigger it (the substr block's max-batch spike).
     */
   def start(curated: DataFrame, indexDir: String, outDir: String,
       checkpointDir: String, idCol: String = "doc_id",
@@ -147,41 +140,21 @@ object SubstrIngest {
       sinkGate: () => Boolean = () => true,
       autoCompactFanout: Int = 8): StreamingQuery = {
     val streamId = AnnIngest.streamIdOf("substr", checkpointDir)
-    val foldPool = java.util.concurrent.Executors.newSingleThreadExecutor(
-      r => { val t = new Thread(r, "substr-tier-fold"); t.setDaemon(true); t })
-    val pendingFold = new java.util.concurrent.atomic.AtomicReference[
-      java.util.concurrent.Future[Option[SubstrIndex.PreparedTier]]]()
-    curated
+    val folder = new TierFolder("substr", SubstrIndex.Tier, indexDir,
+      autoCompactFanout)
+    folder.bind(curated
       .select(col(idCol), col(textCol))
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (df: DataFrame, batchId: Long) =>
-        if (sinkGate()) {
-          val spark = df.sparkSession
-          val f = pendingFold.get()
-          if (f != null && f.isDone) {
-            pendingFold.set(null)
-            // harvest a finished background merge first: one manifest
-            // write; a failed prepare is dropped (orphan files only)
-            try f.get().foreach(p =>
-              SubstrIndex.commitPreparedTier(spark, indexDir, p): Unit)
-            catch { case _: java.util.concurrent.ExecutionException => () }
+        if (sinkGate())
+          folder.around(df.sparkSession) {
+            applyBatch(df.sparkSession, indexDir, outDir, df, idCol,
+              textCol, streamId, batchId, minSpanTokens): Unit
           }
-          applyBatch(spark, indexDir, outDir, df, idCol,
-            textCol, streamId, batchId, minSpanTokens,
-            autoCompactFanout = 0): Unit
-          if (autoCompactFanout > 0 && pendingFold.get() == null)
-            pendingFold.set(foldPool.submit(
-              new java.util.concurrent.Callable[
-                  Option[SubstrIndex.PreparedTier]] {
-                def call(): Option[SubstrIndex.PreparedTier] =
-                  SubstrIndex.prepareCompactTier(spark, indexDir,
-                    autoCompactFanout)
-              }))
-        }
       }
-      .start()
+      .start())
   }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions.lit
+
 import graft.extra.Graph
 
 /** Hand-checked PageRank behavior (the oracle gate replays the exact
@@ -8,6 +10,34 @@ import graft.extra.Graph
   */
 class GraphSpec extends SparkSpec {
   import spark.implicits._
+
+  test("plan-capture mode (checkpoint off): pagerank, bfs and " +
+      "connected components fail fast with a clear error instead of " +
+      "blocking on their never-filled Observation metric") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    import graft.extra.Dedup
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
+    val runs: Seq[(String, () => Any)] = Seq(
+      "pagerank" -> (() => Graph.pagerank(edges, "src", "dst", iters = 2)),
+      "bfs" -> (() => Graph.bfs(edges, "src", "dst", lit(1L), 3)),
+      "connectedComponents" ->
+        (() => Graph.connectedComponents(edges, "src", "dst")))
+    sys.props(Dedup.AllowOffProp) = "1"
+    spark.conf.set(Dedup.CheckpointModeKey, "off")
+    try runs.foreach { case (name, run) =>
+      val outcome = Await.result(
+        Future(scala.util.Try(run())), 60.seconds)
+      val err = outcome.failed.toOption
+      assert(err.exists(_.isInstanceOf[UnsupportedOperationException]),
+        s"$name under checkpoint mode off: $outcome")
+      assert(err.get.getMessage.contains(Dedup.CheckpointModeKey))
+    } finally {
+      spark.conf.unset(Dedup.CheckpointModeKey)
+      sys.props.remove(Dedup.AllowOffProp): Unit
+    }
+  }
 
   test("two-node cycle: perfect symmetry keeps both ranks at 1/2") {
     val edges = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
